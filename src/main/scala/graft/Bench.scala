@@ -1,4 +1,9 @@
 package graft
+import java.nio.file.{FileVisitOption, Files, LinkOption, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2020,9 +2025,171 @@ object Bench {
     }),
   )
 
+  // ----- the measurement protocol -----
+  //
+  // Declared up front and the same for every query: `Runs` timed runs,
+  // or — for a query with a raw baseline — `Runs` interleaved
+  // wrapped/raw pairs, raw first on every odd pair. Only successful
+  // runs count. Each side reports its min and median; the baseline
+  // gate reads the ratio of the mins.
+
+  private[graft] val Runs = 3
+
+  /** Wrapped/raw ratio of the mins above which a pair fails the gate. */
+  private[graft] val Gate = 2.0
+
+  /** One timed run: drop cached relations and collect garbage so
+    * earlier runs don't press on this one, then execute the PHYSICAL
+    * plan and count its rows. `df.count()` would not do: Catalyst
+    * rewrites it, and over a global-aggregate shape (or a union of
+    * them) it returns the statically known row count without running
+    * the aggregation. `toRdd` runs the planned tree verbatim. The frame
+    * is built inside the timed window. Returns (seconds, rows). */
+  private[graft] def timeRun(spark: SparkSession)(mk: => DataFrame): (Double, Long) = {
+    spark.catalog.clearCache()
+    System.gc()
+    val t0 = System.nanoTime()
+    val rows = mk.queryExecution.toRdd.count()
+    ((System.nanoTime() - t0) / 1e9, rows)
+  }
+
+  /** Min and median seconds of one side's successful runs. */
+  private[graft] final case class Side(min: Double, median: Double)
+
+  /** Summarises one side's runs, where `None` is a failed run: it never
+    * enters the min or the median. No successful run gives `None`. */
+  private[graft] def side(runs: Seq[Option[Double]]): Option[Side] = {
+    val ok = runs.flatten.sorted
+    if (ok.isEmpty) None
+    else Some(Side(ok.head, (ok((ok.size - 1) / 2) + ok(ok.size / 2)) / 2))
+  }
+
+  /** One query's result. `raw` is `None` for a query without a
+    * baseline and `Some(None)` for a baseline that never succeeded. */
+  private[graft] final case class Outcome(
+      name: String, wrapped: Option[Side], raw: Option[Option[Side]] = None) {
+    def ratio: Option[Double] =
+      for (w <- wrapped; r <- raw.flatten) yield w.min / math.max(r.min, 1e-9)
+  }
+
+  /** Runs one query under the protocol. Each function performs one run
+    * and returns its seconds, or `None` when the run failed. */
+  private[graft] def measure(
+      name: String,
+      wrapped: () => Option[Double],
+      raw: Option[() => Option[Double]]): Outcome = raw match {
+    case None => Outcome(name, side(Seq.fill(Runs)(wrapped())))
+    case Some(r) =>
+      val pairs = (0 until Runs).map { i =>
+        if (i % 2 == 0) { val w = wrapped(); (w, r()) }
+        else { val b = r(); (wrapped(), b) }
+      }
+      Outcome(name, side(pairs.map(_._1)), Some(side(pairs.map(_._2))))
+  }
+
+  private def fmt(v: Double): String = {
+    val s = java.math.BigDecimal.valueOf(v)
+      .setScale(2, java.math.RoundingMode.HALF_UP)
+      .stripTrailingZeros.toPlainString
+    if (s == "-0") "0" else s
+  }
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private val Skipped = "\"SKIPPED\""
+
+  private def header(outcomes: Seq[Outcome]): Seq[(String, String)] = Seq(
+    "metric" -> "\"total\"",
+    "value" -> fmt(outcomes.flatMap(_.wrapped).map(_.min).sum),
+    "unit" -> "\"sec\"",
+    "runs" -> Runs.toString,
+    "n_queries" -> outcomes.size.toString)
+
+  /** The complete per-query maps, for the log file (no length budget).
+    * `meta` entries are appended as given (values already JSON). */
+  private[graft] def renderFull(outcomes: Seq[Outcome], meta: Seq[(String, String)]): String = {
+    val paired = outcomes.filter(_.raw.isDefined)
+    obj(header(outcomes) ++ Seq(
+      "queries" -> obj(outcomes.map(o => o.name -> o.wrapped.fold(Skipped)(s => fmt(s.min)))),
+      "medians" -> obj(outcomes.flatMap(o => o.wrapped.map(s => o.name -> fmt(s.median)))),
+      "baseline_ratios" -> obj(paired.map(o => o.name -> o.ratio.fold(Skipped)(fmt))),
+      "raw" -> obj(paired.flatMap(o => o.raw.flatten.map(s =>
+        o.name -> s"[${fmt(s.min)},${fmt(s.median)}]")))) ++ meta)
+  }
+
+  /** The stdout line. Its reader keeps only the tail of the process
+    * output, so the line must stay within 1700 bytes or its opening
+    * brace is cut and it no longer parses: it carries the slowest
+    * queries (as many as fit, from 30 down), a ratio summary with the
+    * five highest ratios, and the names of up to five skipped queries.
+    * The complete maps go to the log file named in `meta`. */
+  private[graft] def renderCompact(
+      outcomes: Seq[Outcome], meta: Seq[(String, String)]): String = {
+    val ratios = outcomes.flatMap(o => o.ratio.map(o.name -> _))
+    val ratioSummary =
+      if (ratios.isEmpty) """{"n":0}"""
+      else {
+        val rs = ratios.map(_._2).sorted
+        obj(Seq(
+          "n" -> rs.size.toString,
+          "median" -> fmt(rs(rs.size / 2)),
+          "over_gate" -> rs.count(_ > Gate).toString,
+          "top" -> obj(ratios.sortBy(-_._2).take(5).map { case (n, r) => n -> fmt(r) })))
+      }
+    val skipped = outcomes.filter(o => o.wrapped.isEmpty || o.raw.contains(None)).map(_.name)
+    val skippedJson =
+      if (skipped.isEmpty) Nil
+      else Seq("skipped" -> obj(Seq("n" -> skipped.size.toString,
+        "names" -> skipped.take(5).map("\"" + _ + "\"").mkString("[", ",", "]"))))
+    val head = header(outcomes) :+
+      ("median_total" -> fmt(outcomes.flatMap(_.wrapped).map(_.median).sum))
+    val timed = outcomes.flatMap(o => o.wrapped.map(s => o.name -> s.min)).sortBy(-_._2)
+    def render(keep: Int): String = {
+      val (kept, dropped) = timed.splitAt(keep)
+      val omitted =
+        if (dropped.isEmpty) Nil
+        else Seq("omitted_fastest" -> obj(Seq(
+          "n" -> dropped.size.toString, "sec" -> fmt(dropped.map(_._2).sum))))
+      obj(head ++ Seq("queries" -> obj(kept.sortBy(_._1).map { case (n, s) => n -> fmt(s) })) ++
+        omitted ++ skippedJson ++ Seq("ratio_summary" -> ratioSummary) ++ meta)
+    }
+    Iterator.range(30, -1, -5).map(render).find(_.length <= 1700).getOrElse(render(0))
+  }
+
+  /** Stages the corpus `k`× into `out` for a `SPARK_GRAFT_SCALE` run:
+    * `documents.parquet` from [[Scale.scaledDocs]], every other table
+    * copied byte-for-byte from `src`. `out` is cleared first and holds
+    * no links, so a re-run against another source never serves an
+    * earlier corpus's tables. */
+  private[graft] def stageScaled(spark: SparkSession, src: String, k: Int, out: String): Unit = {
+    val from = Paths.get(src)
+    val to = Paths.get(out)
+    if (Files.exists(to, LinkOption.NOFOLLOW_LINKS))
+      Using.resource(Files.walk(to))(_.iterator.asScala.toList.reverse.foreach(Files.delete))
+    Files.createDirectories(to)
+    Scale.scaledDocs(spark, src, k)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .write.parquet(to.resolve("documents.parquet").toString)
+    val docs = from.resolve("documents.parquet")
+    Using.resource(Files.walk(from, FileVisitOption.FOLLOW_LINKS)) { paths =>
+      paths.iterator.asScala.drop(1).filterNot(_.startsWith(docs)).foreach { p =>
+        val dst = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+      }
+    }
+  }
+
+  /** Times every declared query under the protocol above against
+    * `$SPARK_GRAFT_SF_DIR` on `local[$SPARK_GRAFT_CPUS]` and prints one
+    * JSON line. `SPARK_GRAFT_ONLY=q_a,q_b` restricts the run to the
+    * named queries. `SPARK_GRAFT_SCALE=k` (k > 1) first stages the
+    * corpus k× under `target/bench_scaled` and times against that. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "1").toInt
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -2033,542 +2200,76 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Durable evidence (ADVICE r10): the driver's tail capture is
-    // capped at 2000 chars, so per-query timings / FAILED / SKIPPED /
-    // ratio lines survive a round only if persisted OUTSIDE the tail.
-    // Every [bench] line is mirrored here and written, with the
-    // UNTRUNCATED result JSON, to BENCHLOG.txt at exit.
+    // every [bench] line is mirrored to the log file, which also gets
+    // the complete maps the budgeted stdout line leaves out
     val benchLog = new StringBuilder
     def note(msg: String): Unit = {
       System.err.println(msg)
       benchLog.append(msg).append('\n')
     }
 
-    // Execute the PHYSICAL plan and count its output rows —
-    // `df.count()` wraps the frame in a new logical Aggregate that
-    // Catalyst optimizes, and for a global-aggregate-shaped frame (or a
-    // union of them) it short-circuits to the statically-known row
-    // count WITHOUT running the aggregation (the count-prune trap,
-    // bitten a 4th time in r14: q_corr_matrix's raw 6-agg union
-    // "measured" 0.32 s while doing literally no work, flagging the
-    // real single-pass wrapper at 2.9x). toRdd runs the already-planned
-    // physical tree verbatim: every operator executes, nothing is
-    // rewritten, and both ratio sides pay their true cost.
-    def forceCount(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-
-    def time(fn: => Long): Double = {
-      // isolate queries: drop cached relations and nudge the context
-      // cleaner so earlier queries' shuffle files don't inflate later
-      // measurements through memory pressure
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      fn
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (debug/profiling aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val sfName = Paths.get(sfDir).getFileName.toString
+    val (dir, stageSec) =
+      if (scale <= 1) (sfDir, 0.0)
+      else {
+        val out = s"target/bench_scaled/${sfName}_x$scale"
+        val t0 = System.nanoTime()
+        stageScaled(spark, sfDir, scale, out)
+        (out, (System.nanoTime() - t0) / 1e9)
+      }
 
     // untimed warm-up: exercise scan → shuffle → window → write codegen
     // paths once so the FIRST measured query doesn't absorb several
     // seconds of JIT/janino cold start the others never pay
     {
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
+      val r = spark.read.parquet(s"$dir/region.parquet")
       r.groupBy("r_name").count().count()
       spark.range(100000).select(sum(col("id")).over(
         Window.partitionBy(col("id") % 7).orderBy("id")).as("s"))
         .agg(sum("s")).collect()
       ()
     }
-    val results = selected.map { case (name, fn) =>
-      // each run returns (seconds, rows) so a failed retry can't clobber a
-      // successful first run's row count or contribute a fast-failure time
-      def once: (Double, Long) = {
-        var r = -1L
-        val secs = time {
-          try { r = forceCount(fn(spark, sfDir)); r }
-          catch { case e: Throwable =>
-            note(s"[bench] $name FAILED: ${e.getMessage}"); -1L }
-        }
-        (secs, r)
-      }
-      val (first, firstRows) = once
-      // transient-load guard: a multi-second reading on a shared machine
-      // is as likely to be scheduler noise as real cost (r4 measured
-      // 18.6 s in-suite for a query that runs in 2.6 s isolated) — retry
-      // once for any >1 s first reading and keep the best; consecutive
-      // retries see CORRELATED load (r8: q_minhash_dedup read 4.80 s
-      // in-suite vs 2.0 s isolated even with a retry), so when the two
-      // readings still disagree by >1.4× take a third. Sub-1 s readings
-      // aren't worth the re-run. Only a SUCCESSFUL retry may lower the
-      // timing.
-      val (secs, rows) =
-        if (first > 1.0 && firstRows >= 0) {
-          val (second, secondRows) = once
-          var best = if (secondRows >= 0) math.min(first, second) else first
-          if (secondRows >= 0 && math.max(first, second) > 1.4 * best) {
-            val (third, thirdRows) = once
-            if (thirdRows >= 0) best = math.min(best, third)
-          }
-          (best, firstRows)
-        } else (first, firstRows)
-      note(f"[bench] $name%-22s $secs%8.2fs  rows=$rows")
-      name -> secs
-    }
 
-    // wrapped-vs-handwritten ratios (see `baselines` doc). The wrapped
-    // query is RE-timed back-to-back with its baseline so both sides see
-    // the same JIT/codegen warm-up — the suite-order timing above would
-    // bias the ratio against whichever ran colder.
-    val resultMap = results.toMap
-    // best wrapped timing observed in the ratio loop below, per query —
-    // those runs are warm, paired, min-kept re-executions of the SAME
-    // queries, i.e. the closest thing to an isolated reading the suite
-    // produces. Folding them back into the per-query report (min) is
-    // the durable fix for the in-suite load-noise false regressions
-    // that cost a judge adjudication three rounds running (r4/r7/r8).
-    val wrappedBest = scala.collection.mutable.Map.empty[String, Double]
-    // sub-0.5 s queries whose ratio still reads > 1.2 after the extra
-    // warm pairs — auto-annotated in the artifact (see the lottery
-    // comment in the ratio loop) instead of adjudicated by hand
-    val subHalfSecNoise = scala.collection.mutable.Set.empty[String]
-    // Ratios > 1.2 that are the DOCUMENTED pre-crossover cost of a
-    // scale-correct design, each backed by an isolated SCALE.md artifact
-    // row measuring the regime where the design pays off — annotated in
-    // the artifact so the reading is standing evidence, not a fresh
-    // flag every round. r16 RETIRED the bloom family and
-    // q_exact_quantile from this set: both now route adaptively
-    // (broadcast-exact / percentile-aggregate below the measured
-    // crossover, the scale machinery above — see
-    // DataFrameOps.BloomSmallRightRowsConf and
-    // Quantiles.SmallInputRowsConf), so a flag on those names is a
-    // REGRESSION again, not standing evidence.
-    val scaleAdjudicated =
-      Set(
-        // raw pair is the bare-predicate BNLJ, still cheap at sf0.1's
-        // 2.5k-interval sides while the binned join pays explode +
-        // exchange machinery — SCALE.md interval_join rows (12-13x
-        // BNLJ blowup at 8x, binned flat)
-        "q_interval_join",
-        // r18 pair: the raw route persists the RAW vectors partitioned
-        // by a hash cell and serves from 4 of 16 partitions; the
-        // wrapped side additionally pays PQ train + encode at build
-        // time (isolated ×3: wrapped 3.3-3.5 s vs raw 2.0-2.2 s,
-        // ratio 1.5-1.75). The buy is the serve scan: SCALE.md
-        // ann_serve_bytes at ×64 reads 0.45 MB of probed PQ codes vs
-        // 56 MB of raw vectors — 125× less IO per query, the 100 TB
-        // story the toy-scale build cost cannot show
-        "q_ann_index_scan",
-        // r19 pair: raw is the exact brute-force scan; the wrapped
-        // side pays IVF kmeans + PQ codebook training + encode before
-        // it searches — at sf0.1 scale the train floor IS the query
-        // (isolated ×3: wrapped 1.07-1.23 s vs raw 0.84-0.97 s,
-        // ratio 1.27-1.35; sub-1.2 in lighter-load rounds, r18
-        // unflagged). The buy is the same serve story as
-        // q_ann_index_scan: probed-cell PQ codes at 8 B/vector
-        // (SCALE.md ann_serve_bytes 125× IO cut) plus routing that
-        // skips (nlist-nprobe)/nlist of the corpus — wins that grow
-        // with corpus size while the train cost amortises over serves
-        "q_ivf_pq_topk")
-    // Benchmark-design rule (SCALE.md): measured inputs are MATERIALIZED
-    // to parquet before timing. Queries whose sf0.1 wall sits in the
-    // sub-0.5 s band where the ratio is a lottery (r12 verdict item 6;
-    // q_corr_matrix carried the same annotation since r11) run their
-    // wrapped/raw pair on a 16× materialized table so the reading is
-    // evidence, not noise. Both sides see the same dir.
-    val scaledPairDirs: Map[String, String] = {
-      // every table a query touches must exist in the shared dir; the
-      // key shifts align across copies (i*1e8 on each table's key),
-      // so multi-table queries could see a coherent 16× workload on
-      // every side. The bloom pair was TRIED here in r19 and
-      // deliberately reverted: at 16× the right side still sits under
-      // the 1M-row crossover, so the pair measured the router-count
-      // job (the adaptivity tax the raw face never pays — readings
-      // 0.90-1.77 under load), not the operator; the tax itself was
-      // then cut at scale by the limit-bounded router count
-      // (DataFrameOps.boundedRightKeyCount, SCALE.md r19 note), and
-      // the unscaled pair stays in the declared sub-halfsec band.
-      val want: Seq[(String, Seq[(String, String)])] = Seq(
-        "q_target_encode" -> Seq(("orders", "o_orderkey")),
-        "q_corr_matrix" -> Seq(("lineitem", "l_orderkey")))
-        .filter { case (n, _) => resultMap.contains(n) && baselines.contains(n) }
-      want.map { case (n, tables) =>
-        val dir = s"/root/repo/target/bench_scaled/${new java.io.File(sfDir).getName}_x16"
-        tables.foreach { case (table, keyCol) =>
-          val out = s"$dir/$table.parquet"
-          if (!new java.io.File(out).exists()) {
-            val o = spark.read.parquet(s"$sfDir/$table.parquet")
-            (0 until 16).map(i => o.withColumn(keyCol,
-                col(keyCol).cast("long") + lit(i * 100000000L)))
-              .reduce(_ unionByName _)
-              .repartition(32).write.mode("overwrite").parquet(out)
-            note(s"[bench] materialized 16x $table for $n at $out")
+    def show(s: Option[Side]): String =
+      s.fold("SKIPPED")(x => f"${x.min}%6.2fs (median ${x.median}%.2fs)")
+    val raws = baselines
+    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .map { case (name, wrapped) =>
+        var rows = -1L
+        def run(label: String, mk: => DataFrame): () => Option[Double] = () =>
+          try {
+            val (secs, n) = timeRun(spark)(mk)
+            if (label == "wrapped") rows = n
+            Some(secs)
+          } catch { case e: Throwable =>
+            note(s"[bench] $name $label FAILED: ${e.getMessage}")
+            None
           }
-        }
-        n -> dir
-      }.toMap
-    }
-    // best (wrapped, raw) seconds seen for each pair — the end-of-run
-    // second-chance pass folds further readings into these
-    val pairBest = scala.collection.mutable.Map.empty[String, (Double, Double)]
-    val ratios = baselines.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (!resultMap.contains(name)) None
-      else {
-        // paired, interleaved repeats: both sides run the SAME number of
-        // times under the same machine load, with the repeat count set by
-        // the faster side's best-so-far (sub-second → 3 pairs, 1-3 s → 2,
-        // slower → 1; jitter is proportionally small on long runs and
-        // re-runs would double the expensive family's cost for no signal).
-        // r5 lesson: per-side adaptive repeats let one noisy first wrapped
-        // reading (1.15 s) cap wrapped at 2 tries while the clean 0.48 s
-        // raw got 3 — reporting 2.39 for a query that measures 0.83
-        // isolated. Pairing removes that asymmetry.
-        // each run reports success: a failed run returns near-instantly and
-        // its timing must NOT enter the min — that would silently report a
-        // flattering (or meaningless) ratio for a broken query. Mirrors the
-        // (Double, Long) pattern of the timed-run path above.
-        val pairDir = scaledPairDirs.getOrElse(name, sfDir)
-        def wrappedOnce: (Double, Boolean) = {
-          var ok = true
-          val secs = time(
-            try forceCount(SparkEntry.queries(name)(spark, pairDir))
-            catch { case e: Throwable =>
-              ok = false
-              note(s"[bench] baseline $name wrapped FAILED: ${e.getMessage}")
-              -1L })
-          (secs, ok)
-        }
-        def rawOnce: (Double, Boolean) = {
-          var ok = true
-          val secs = time(
-            try forceCount(fn(spark, pairDir))
-            catch { case e: Throwable =>
-              ok = false
-              note(s"[bench] baseline $name raw FAILED: ${e.getMessage}")
-              -1L })
-          (secs, ok)
-        }
-        // only a successful run may lower the best-so-far
-        def better(cur: Double, run: (Double, Boolean)): Double =
-          if (run._2) math.min(cur, run._1) else cur
-        var wrappedSecs = better(Double.MaxValue, wrappedOnce)
-        var rawSecs = better(Double.MaxValue, rawOnce)
-        val extraPairs = {
-          val m = math.min(wrappedSecs, rawSecs)
-          if (m == Double.MaxValue) 1 // both first runs failed: one more chance
-          // >1 s queries get one extra pair (incl. >3 s — see r7 lesson
-          // below); sub-second ones two, where pairs are cheap
-          else if (m > 1.0) 1 else 2
-        }
-        // >3 s queries get one extra pair too (r7 lesson: "jitter is
-        // proportionally small on long runs" is false for FIRST runs —
-        // q_salted_join_skew's cold wrapped run measured 4.17 s against
-        // 2.30 s warm, and with zero extra pairs min-keeping could never
-        // shed it, reporting 1.36 for an operator that measures 0.67
-        // warm. One warm pair per side fixes the asymmetry.)
-        for (_ <- 0 until extraPairs) {
-          wrappedSecs = better(wrappedSecs, wrappedOnce)
-          rawSecs = better(rawSecs, rawOnce)
-        }
-        if (wrappedSecs == Double.MaxValue || rawSecs == Double.MaxValue) {
-          note(
-            s"[bench] baseline $name SKIPPED: no successful " +
-              (if (wrappedSecs == Double.MaxValue) "wrapped" else "raw") + " run")
-          None
-        } else {
-          // an adverse reading (wrapped looking >1.2× raw — the series'
-          // adjudication threshold, lowered from 1.5 after r9 measured
-          // that on 0.2-0.6 s queries a ±0.05 s swing moves the ratio
-          // ~0.1-0.2 and a different query drew a >1.2 flag on every
-          // full run) gets one adjudication pair before being
-          // reported — design-win ratios (wrapped ≪ raw) are expected
-          // and don't trigger the re-run. The adjudication is one-sided
-          // by design (noise suppression on the 2× bar), so the
-          // artifact records when it changed a verdict.
-          val preRatio = wrappedSecs / math.max(rawSecs, 1e-9)
-          if (preRatio > 1.2 && wrappedSecs < 5.0) {
-            wrappedSecs = better(wrappedSecs, wrappedOnce)
-            rawSecs = better(rawSecs, rawOnce)
-            val postRatio = wrappedSecs / math.max(rawSecs, 1e-9)
-            if (math.rint(postRatio * 100) != math.rint(preRatio * 100))
-              note(
-                f"[bench] baseline $name adjudication pair changed ratio $preRatio%5.2f -> $postRatio%5.2f")
-          }
-          // structural retirement of the sub-half-second ratio lottery
-          // (r9 verdict item 4): on a < 0.5 s query a ±0.05 s scheduler
-          // swing moves the ratio ~0.1-0.2, and every full-suite run saw
-          // a DIFFERENT fast query draw > 1.2 — each costing a manual
-          // isolated-run adjudication that always read ≈1.0 (SCALE.md
-          // r8/r9 adjudication tables). Two fixes, in order: (a) such a
-          // flag buys up to two MORE warm pairs (cheap at < 0.5 s — the
-          // whole loop is under a second); (b) a flag that still
-          // survives is emitted under "sub_halfsec_noise" in the
-          // artifact — the reading is inside the noise band the isolated
-          // runs established, auto-annotated so it needs a judge shrug,
-          // not a hand adjudication. Real regressions on fast queries
-          // remain visible: the ratio is still reported, and a
-          // reproducible one (q_runlog r9, 3× isolated ≈1.2) survives
-          // every warm pair and shows up round after round.
-          var lotteryRatio = wrappedSecs / math.max(rawSecs, 1e-9)
-          var lotteryPairs = 0
-          while (lotteryRatio > 1.2 && wrappedSecs < 0.5 && lotteryPairs < 2) {
-            wrappedSecs = better(wrappedSecs, wrappedOnce)
-            rawSecs = better(rawSecs, rawOnce)
-            lotteryRatio = wrappedSecs / math.max(rawSecs, 1e-9)
-            lotteryPairs += 1
-          }
-          if (lotteryRatio > 1.2 && wrappedSecs < 0.5)
-            subHalfSecNoise += name
-          val ratio = lotteryRatio
-          note(
-            f"[bench] baseline $name%-20s wrapped=$wrappedSecs%6.2fs raw=$rawSecs%6.2fs ratio=$ratio%5.2f" +
-              (if (scaledPairDirs.contains(name)) "  [16x materialized input]" else "") +
-              (if (subHalfSecNoise.contains(name)) "  [sub-0.5s noise band]" else "") +
-              (if (scaleAdjudicated.contains(name) && ratio > 1.2)
-                 "  [pre-crossover by design: SCALE.md scale_adjudicated]" else ""))
-          // scaled pairs measure a DIFFERENT input size — their warm
-          // wrapped best must not fold into the per-query sf report
-          if (!scaledPairDirs.contains(name)) wrappedBest(name) = wrappedSecs
-          pairBest(name) = (wrappedSecs, rawSecs)
-          Some(name -> math.rint(ratio * 100) / 100)
-        }
+        val o = measure(name, run("wrapped", wrapped(spark, dir)),
+          raws.get(name).map(raw => run("raw", raw(spark, dir))))
+        note(f"[bench] $name%-26s ${show(o.wrapped)}  rows=$rows" + o.raw.fold("") { r =>
+          s"  raw=${show(r)}  ratio=" +
+            o.ratio.fold("SKIPPED")(x => f"$x%.2f" + (if (x > Gate) "  OVER GATE" else ""))
+        })
+        o
       }
-    }
-    // Second-chance pass (r14): a >1.2 flag measured mid-loop sees the
-    // SAME correlated machine load on its in-place adjudication pair
-    // (the r8 lesson — consecutive retries don't decorrelate), so
-    // q_bigram_perplexity read 1.62 in-suite against 1.11 isolated.
-    // Unannotated flags get two MORE min-folded pairs HERE, after the
-    // whole ratio loop has drained the suite's own load — the closest
-    // thing to an isolated re-measurement the run can produce, recorded
-    // in the log when it changes the reading.
-    val secondChance = scala.collection.mutable.Map.empty[String, Double]
-    ratios.foreach { case (name, r) =>
-      if (r > 1.2 && !subHalfSecNoise.contains(name) &&
-          !scaleAdjudicated.contains(name) && pairBest.contains(name)) {
-        val fn = baselines(name)
-        val pairDir = scaledPairDirs.getOrElse(name, sfDir)
-        var (w, rw) = pairBest(name)
-        def fold(cur: Double, mk: => org.apache.spark.sql.DataFrame): Double = {
-          var ok = true
-          val s = time(try forceCount(mk) catch { case _: Throwable => ok = false; -1L })
-          if (ok) math.min(cur, s) else cur
-        }
-        for (_ <- 0 until 2) {
-          w = fold(w, SparkEntry.queries(name)(spark, pairDir))
-          rw = fold(rw, fn(spark, pairDir))
-        }
-        val nr = math.rint(w / math.max(rw, 1e-9) * 100) / 100
-        if (nr != r)
-          note(f"[bench] baseline $name end-of-run re-pair changed ratio $r%5.2f -> $nr%5.2f")
-        secondChance(name) = nr
-        if (!scaledPairDirs.contains(name))
-          wrappedBest(name) = math.min(wrappedBest.getOrElse(name, w), w)
-      }
-    }
-    val finalRatios = ratios.map { case (n, r) => n -> secondChance.getOrElse(n, r) }
 
-    // The harness keeps only the tail of this process's output, so the
-    // result line must stay SHORT (< ~1800 bytes) or its opening brace
-    // is truncated away and the JSON never parses. Emit 2-decimal
-    // seconds and, if the full per-query map still doesn't fit, roll the
-    // fastest queries into one "omitted_fastest" aggregate — the slow
-    // queries (the ones a reader acts on) always stay itemised.
-    def fmt(v: Double): String = {
-      val s = java.math.BigDecimal.valueOf(v)
-        .setScale(2, java.math.RoundingMode.HALF_UP)
-        .stripTrailingZeros.toPlainString
-      if (s.isEmpty || s == "-0") "0" else s
-    }
-    // per-query report folds in the ratio loop's warm wrapped best (see
-    // wrappedBest doc) — min, so a query can only be de-noised, never
-    // inflated, and queries without a raw baseline keep their suite
-    // reading unchanged
-    val finalResults = results.map { case (n, s) =>
-      n -> wrappedBest.get(n).map(math.min(s, _)).getOrElse(s)
-    }
-    val total = finalResults.map(_._2).sum
-    // cold-suite numbers stay auditable next to the de-noised report
-    // (advice r9): the untouched suite total, plus the untouched suite
-    // reading for every query the warm fold moved materially (> 0.1 s),
-    // capped at the 5 largest deltas to protect the line budget — so a
-    // round-over-round reader can always separate "the protocol shed
-    // cold/load noise" from "the query got faster"
-    val suiteTotal = results.map(_._2).sum
-    val finalByName = finalResults.toMap
-    val suiteMoved = results
-      .flatMap { case (n, s) =>
-        val d = s - finalByName.getOrElse(n, s)
-        if (d > 0.1) Some((n, s, d)) else None
-      }
-      .sortBy(-_._3).take(5)
-    val suiteColdJson = {
-      val qs = suiteMoved.map { case (n, s, _) => s"\"" + n + "\":" + fmt(s) }
-      (("\"total\":" + fmt(suiteTotal)) +: qs).mkString("{", ",", "}")
-    }
-    val noiseJson =
-      if (subHalfSecNoise.isEmpty) ""
-      else subHalfSecNoise.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""","sub_halfsec_noise":[""", ",", "]")
-    val adjudicatedFlagged = finalRatios.collect {
-      case (name, r) if scaleAdjudicated.contains(name) && r > 1.2 => name
-    }
-    val adjudicatedJson =
-      if (adjudicatedFlagged.isEmpty) ""
-      else adjudicatedFlagged.sorted.map("\"" + _ + "\"")
-        .mkString(""","scale_adjudicated":[""", ",", "]")
-    val ratioJson = finalRatios.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Absolute-seconds outlier report over ALL queries (r14 verdict
-    // item 3): the >1.2-ratio audit only covers queries WITH a raw
-    // baseline, so a slow unpaired query could sit unflagged in a green
-    // suite for rounds (q_asof_forward 69 s, q_script_profile 57 s —
-    // both invisible until the honest-consumption protocol change).
-    // Every top-N entry must be paired (its ratio is the evidence),
-    // scale-adjudicated, or carry an explicit annotation below saying
-    // why its absolute cost is the designed cost — anything else is
-    // emitted as UNEXPLAINED, which a round reader treats as a flag.
-    val topSecAnnotations: Map[String, String] = Map(
-      "q_dedup_quality" -> ("evaluation harness: the exact all-pairs n-gram " +
-        "Jaccard ground truth is QUADRATIC by contract, gated to a bounded " +
-        "sample by pairQuality's maxDocs require"),
-      "q_stream_substring" -> ("multi-batch stateful stream replay (real " +
-        "micro-batch runs, dominated by per-batch fixed cost not data)"),
-      "q_stream_dedup_fullrecall" -> ("multi-batch stateful stream replay " +
-        "with parquet state store; per-batch fixed cost, paired raw rung"),
-      "q_substring_dedup_incr" -> ("incremental rung re-runs the window " +
-        "grain against the persisted store; SCALE.md substring rows"),
-      "q_substring_profile" -> ("span-merge profile over the same window " +
-        "grain as q_substring_dedup (paired); adds only the profile agg"),
-      "q_connected_components" -> ("iterative large-star/small-star over " +
-        "LSH pairs; O(log n) rounds each a keyed exchange, SCALE.md graph " +
-        "rows"),
-      "q_pipeline_incremental" -> ("composed incremental-ingest proof in " +
-        "its serving shape: writes the text-free minhash artifact, derives " +
-        "ref state from it, one batch kernel pass for all new edges, " +
-        "artifact relabel; each component paired/measured individually " +
-        "(q_minhash_dedup, q_dedup_against_ref, SCALE.md cc_incremental " +
-        "rows). The default-on canonicality probe was re-cut for r19 " +
-        "(one fused collect job + a lazy self-row leg): SCALE.md " +
-        "cc_small_batch r19 rows price it at ~0.2-0.3 s warm per ingest " +
-        "(vs 0.9-2.3 s at r18), plus ~2 s of once-per-JVM JIT visible " +
-        "only in each run's first probed ingest; r19 isolated x3 at " +
-        "HEAD read 5.45-5.86 s. SCALE.md's r19 phase decomposition " +
-        "accounts for every warm second (ref build 0.7, ref CC 1.2, " +
-        "batch kernel 1.05, ingest 2.9 incl the deferred pair subtree, " +
-        "consume 0.2): all real pipeline work at the 32-task floor, no " +
-        "single fat job to cut"),
-      // q_ann_persist / q_ann_index_scan: paired with raw write+
-      // readback+search baselines since r18 (their r17 annotations
-      // explained the shape but could not flag a 4× IO-path jump)
-      "q_ann_recall" -> ("PQ-vs-exact recall harness (brute-force top-k " +
-        "+ PQ top-k + join); r18 isolated ×3 at HEAD read 1.66-1.83 s, " +
-        "retiring the r17 UNEXPLAINED flag (final-suite 6.23 s was load " +
-        "noise; mid-round same-source read 1.70-1.80 s) — suite " +
-        "readings well above ~2 s here are contention, not code"),
-      "q_dedup_against_ref" -> ("artifact-serve rung measured against " +
-        "online recompute in SCALE.md minhash_reference rows"),
-      "q_conv_turns" -> ("turn-grain explode of the synthetic chat " +
-        "corpus (row count is turns, ~3x docs, the only corpus-grain " +
-        "explode-to-output query in the suite); r18 isolated ×3 read " +
-        "2.18-2.54 s — suite readings near 3 s are tail-boundary load " +
-        "noise (r17 pruned this annotation at 1.76 s; re-added per its " +
-        "own re-annotate-if-it-climbs note)"),
-      "q_robust_scale" -> ("grouped exact-bounds robust scaling: the " +
-        "per-group quantile-bounds machinery is raw-paired via its " +
-        "siblings (q_winsorize, q_exact_quantile) and SCALE.md r15 " +
-        "stats rows; isolated runs read 1.7-2.2s, suite readings above " +
-        "that are load noise at the top-8 tail boundary"))
-    // pruned r17 (no longer near the top-8 tail): q_pipeline_web 1.21s,
-    // q_stream_asof 1.28s, q_pipeline_chat 0.68s, q_conv_turns 1.76s —
-    // tail was 3.08s this round; re-annotate if one climbs back
-    val topSec = finalResults.sortBy(-_._2).take(8).map { case (n, s) =>
-      val status =
-        if (baselines.contains(n)) "paired"
-        else if (scaleAdjudicated.contains(n)) "scale_adjudicated"
-        else if (topSecAnnotations.contains(n)) "annotated"
-        else "UNEXPLAINED"
-      (n, s, status)
-    }
-    topSec.foreach { case (n, s, status) =>
-      note(f"[bench] top_sec $n%-26s $s%6.2fs  $status" +
-        topSecAnnotations.get(n).map(a => s" — $a").getOrElse(""))
-    }
-    val topSecJson = topSec
-      .map { case (n, s, st) => s"\"" + n + "\":[" + fmt(s) + ",\"" + st + "\"]" }
-      .mkString(""","top_sec":{""", ",", "}")
-    val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    // SPARK_GRAFT_ONLY subset runs write BENCHLOG_only.txt instead —
-    // a targeted adjudication must not clobber the round's durable
-    // full-suite evidence (the r18 workflow required a manual
-    // `git checkout BENCHLOG.txt` after every targeted run)
-    val logPath = if (only.isDefined) "BENCHLOG_only.txt" else "BENCHLOG.txt"
-    def render(keep: Int): String = {
-      val bySlow = finalResults.sortBy(-_._2)
-      val (kept, dropped) = bySlow.splitAt(keep)
-      val qs = kept.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val omitted =
-        if (dropped.isEmpty) ""
-        else s""","omitted_fastest":{"n":${dropped.size},"sec":${fmt(dropped.map(_._2).sum)}}"""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${finalResults.size},"queries":$qs$omitted,"baseline_ratios":$ratioJson$noiseJson$adjudicatedJson$topSecJson,"suite_cold":$suiteColdJson,"sf":"$sfName"}"""
-    }
-    // The stdout line is TAIL-CAPTURED at ~2 KB by the harness: any
-    // overflow cuts the OPENING brace and the driver records
-    // parsed=null (r14's line overflowed exactly this way — the full
-    // maps were only recoverable from BENCHLOG.txt). The stdout line
-    // therefore carries summaries a reader acts on — slowest-N
-    // queries, ratio distribution + every flagged (> 1.2) ratio, the
-    // compact top_sec — and defers the complete per-query/per-ratio
-    // maps to BENCHLOG.txt's final line, which has no length budget.
-    def renderCompact(keep: Int): String = {
-      val bySlow = finalResults.sortBy(-_._2)
-      val (kept, dropped) = bySlow.splitAt(keep)
-      val qs = kept.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val omitted =
-        if (dropped.isEmpty) ""
-        else s""","omitted_fastest":{"n":${dropped.size},"sec":${fmt(dropped.map(_._2).sum)}}"""
-      val rs = finalRatios.map(_._2).sorted
-      val ratioSummary =
-        if (rs.isEmpty) """{"n":0}"""
-        else {
-          val mean = math.rint(rs.sum / rs.size * 100) / 100
-          val median = math.rint(rs(rs.size / 2) * 100) / 100
-          val flagged = finalRatios.filter(_._2 > 1.2).sortBy(-_._2)
-            .map { case (k, v) => s"\"" + k + "\":" + v }
-            .mkString("{", ",", "}")
-          s"""{"n":${rs.size},"mean":$mean,"median":$median,"flagged":$flagged}"""
-        }
-      val topCompact = topSec
-        .map { case (n, s, st) =>
-          s"\"" + n + "\":[" + fmt(s) + ",\"" + st.take(1) + "\"]" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${finalResults.size},"queries":$qs$omitted,"ratio_summary":$ratioSummary$noiseJson$adjudicatedJson,"top_sec":$topCompact,"suite_cold":$suiteColdJson,"full_maps":"$logPath","sf":"$sfName"}"""
-    }
-    val line = Iterator.range(30, -1, -5).map(renderCompact)
-      .find(_.length <= 1700)
-      .getOrElse(renderCompact(0))
-    println(line)
-    // full, never-truncated artifact: every mirrored [bench] line plus
-    // the complete per-query JSON (render(all) has no omitted_fastest).
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(logPath),
-      benchLog.toString + render(finalResults.size) + "\n")
+    // subset and scaled runs log to BENCHLOG_only.txt, so they never
+    // overwrite the full-suite evidence in BENCHLOG.txt
+    val subset = only.isDefined || scale > 1
+    val logPath = if (subset) "BENCHLOG_only.txt" else "BENCHLOG.txt"
+    val meta = Seq("scale" -> scale.toString, "stage_sec" -> fmt(stageSec),
+      "cpus" -> cpus, "sf" -> ("\"" + sfName + "\""))
+    println(renderCompact(outcomes, ("full_maps" -> ("\"" + logPath + "\"")) +: meta))
+    try Files.writeString(Paths.get(logPath),
+      benchLog.toString + renderFull(outcomes, meta) + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] $logPath write failed: ${e.getMessage}") }
-    // mechanical round-artifact commit (r18 verdict task 2: BENCHLOG/
-    // LEAKCHECK/BENCH_rN/CORRECTNESS_rN sat dirty at judging time three
-    // rounds running — a task repeatedly re-failed by memory gets a
-    // mechanical fix): full runs hand the artifact paths to
-    // scripts/commit_artifacts.sh, which commits ONLY those paths.
-    // Subset runs skip it; SPARK_GRAFT_NO_COMMIT=1 disables it.
-    if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_NO_COMMIT")) {
+    // full runs commit the round artifacts through
+    // scripts/commit_artifacts.sh (which commits only those paths);
+    // SPARK_GRAFT_NO_COMMIT=1 disables it
+    if (!subset && !sys.env.contains("SPARK_GRAFT_NO_COMMIT")) {
       try {
         val script = new java.io.File("scripts/commit_artifacts.sh")
         if (script.exists())

@@ -87,19 +87,10 @@ object Scale {
       sys.env.get("SPARK_GRAFT_SCALE_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-    // ONE timing protocol for every artifact row (cache clear + GC,
-    // one counted action, centiseconds) — protocol changes happen HERE
-    // or rows stop being comparable across blocks
+    // Bench.timeRun, so artifact rows and Bench readings are timed alike
     def timed(name: String, tags: (String, Long)*)(mk: () => DataFrame): Unit = {
       if (only.exists(!_.contains(name))) return
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      // physical-plan execution, NOT df.count(): Catalyst short-circuits
-      // count over global-aggregate shapes without running them (the
-      // r14 Bench adjudication — see Bench.forceCount)
-      val n = mk().queryExecution.toRdd.count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (secs, n) = Bench.timeRun(spark)(mk())
       val tagJson = tags.map { case (key, v) => s""","$key":$v""" }.mkString
       println(s"""{"op":"$name"$tagJson,"secs":${math.rint(secs * 100) / 100},"out_rows":$n}""")
     }

@@ -59,9 +59,12 @@ object Relevance {
       textCol: String,
       minDf: Long = 1L): DataFrame = {
     require(minDf >= 1, s"tfIdf: minDf must be >= 1, got $minDf")
+    require(!df.columns.exists(_.equalsIgnoreCase("__graft_n_docs")),
+      "tfIdf: input must not carry the reserved column __graft_n_docs")
     // count(1) cast double ≡ the old nDocs.toDouble (counts are exact
-    // in double far beyond any corpus size); the count-star subtree is
-    // column-pruned to a metadata-level scan
+    // in double far beyond any corpus size). The count-star is
+    // metadata-cheap only when df is a bare scan; on a derived df it
+    // re-executes the upstream plan inside the same job
     val nDocs = df.agg(count(lit(1)).cast("double").as("__graft_n_docs"))
     val tf = docTermFrequencies(df, idCol, textCol)
     val docFreqAll = tf.groupBy("word").agg(count(lit(1)).as("df_docs"))

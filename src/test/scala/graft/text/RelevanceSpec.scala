@@ -40,6 +40,12 @@ class RelevanceSpec extends SparkTestBase {
     assert(!out.select("word").as[String].collect().contains("zzz_unique"))
   }
 
+  test("tfIdf rejects an input carrying its reserved __graft_n_docs column") {
+    assertThrowsMessage[IllegalArgumentException]("__graft_n_docs") {
+      Relevance.tfIdf(docs.withColumn("__graft_n_docs", lit(1.0)), "doc_id", "text")
+    }
+  }
+
   test("bm25TopK ranks the term-dense short doc first and respects k") {
     val top = Relevance.bm25TopK(docs, "doc_id", "text", Seq("spark"), k = 2)
     val rows = top.collect()
